@@ -71,6 +71,16 @@ object Bench {
       s""""steal_ms_total":$stealTotal,"bench_cpus":$cpus,"full":"$out"}"""
   }
 
+  /** Between-pass reset: every pass pays the same chain builds, so
+    * min-of-N compares equal work, not first-build vs marginal. Frees
+    * the [[graft.pipeline.Staged.PerRun]] entries; trained artifacts
+    * stay staged (see [[graft.pipeline.Staged]]).
+    */
+  private[graft] def passReset(spark: SparkSession): Unit = {
+    graft.pipeline.Staged.release(spark, graft.pipeline.Staged.PerRun)
+    spark.catalog.clearCache()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -82,9 +92,9 @@ object Bench {
     // query in PASSES full passes (default 2, env-tunable) and
     // reports the per-query MIN as the noise-adjusted number — the
     // standard min-of-N practice — alongside the raw pass-1 walls.
-    // Between passes the session-staged dedup chain is released and
-    // the cache cleared, so every pass measures the SAME work
-    // (chain-build cost included), not a warm-state rerun.
+    // Between passes the per-run staged chains are released and the
+    // cache cleared ([[passReset]]), so every pass measures the SAME
+    // work (chain-build cost included), not a warm-state rerun.
     val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt)
     val spark = graft.sources.Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -135,31 +145,7 @@ object Bench {
       }
     graft.pipeline.ChainBill.reset()
     val allPasses = (1 to passes).map { p =>
-      // Reset session-staged state so every pass pays the chain build:
-      // min-of-N must compare equal work, not first-build vs marginal.
-      // Deliberately NOT released: KnnChain, OpqChain and DsirChain —
-      // trained indexes/models are build-once/serve-many artifacts, so
-      // min-of-passes measures their marginal serve cost (full train
-      // stays visible in pass-1 raw walls). Everything computed from
-      // the corpus per run (signatures, hashes, pair graphs, scored
-      // frames, frontiers) is released: r21 pass-reset fix — the
-      // image-hash tier had ridden a warm pass 2 since r14, which
-      // min-of-N then silently preferred.
-      if (p > 1) {
-        graft.pipeline.DedupChain.release(spark)
-        graft.pipeline.IvfChain.release(spark)
-        graft.pipeline.BpeChain.release(spark)
-        graft.pipeline.PackChain.release(spark)
-        // The serving-walk frontier is per-query-batch work, not a
-        // trained artifact — released so every pass pays the walk once
-        // (its input, the KnnChain graph, stays staged as before).
-        graft.pipeline.WalkChain.release(spark)
-        graft.pipeline.AHashChain.release(spark)
-        graft.pipeline.VideoChain.release(spark)
-        graft.pipeline.BigramChain.release(spark)
-        graft.pipeline.TopKChain.release(spark)
-        spark.catalog.clearCache()
-      }
+      if (p > 1) passReset(spark)
       runPass()
     }
     val names = allPasses.head.map(_._1)

@@ -1,11 +1,9 @@
 package graft.pipeline
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Session-scoped memo for the shared MinHash-LSH dedup chain.
+/** Session-staged MinHash-LSH dedup chain ([[Staged.PerRun]]).
   *
   * Five declared queries (`dedup_lsh_pairs`, `dedup_jaccard`,
   * `dedup_editdist`, `dedup_clusters`, `corpus_filter`) consume
@@ -13,42 +11,16 @@ import org.apache.spark.sql.functions._
   * pairs → Jaccard-verified pairs → connected-component labels (the
   * edit-distance verifier branches off the candidate stage).
   * Re-deriving the whole chain
-  * from raw text per query tripled the bench bill (round 3 verdict);
-  * a production pipeline materializes each stage once and fans the
-  * consumers out from it — this memo is that materialization, keyed on
-  * (session, scale dir) so Verify/Bench sessions and different scale
-  * factors never cross-contaminate.
-  *
-  * `localCheckpoint` rather than `persist`: the harness calls
-  * `spark.catalog.clearCache()` after every query, which drops
-  * CacheManager entries (persists) but not checkpoint RDD blocks, so
-  * the staged frames survive across queries within a session. The
-  * frames are pair/label tables — O(candidate pairs), not O(corpus) —
-  * so holding them for the session is cheap at any scale. Results are
-  * unchanged: every stage is deterministic, and each query still
-  * declares (and the oracle re-computes) the exact same frame.
+  * from raw text per query tripled the bench bill (round 3 verdict).
+  * The frames are pair/label tables — O(candidate pairs), not
+  * O(corpus) — so holding them for the session is cheap at any scale.
   */
 object DedupChain {
 
-  private val memo = TrieMap.empty[(SparkSession, String, String), DataFrame]
+  private[graft] val stage = new Staged.Chain("DedupChain", Staged.PerRun)
 
-  private def cached(s: SparkSession, dir: String, stage: String)(
-      build: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir, stage),
-      ChainBill.time("DedupChain")(build.localCheckpoint(true)))
-
-  /** Drop every staged frame for `s` and free its checkpoint blocks.
-    * The memo is session-lifetime by design (Bench/Verify never need
-    * this), but a long-lived session cycling through many scale dirs —
-    * or a test suite about to stop `s` — should release explicitly:
-    * entries hold strong DataFrame references, so neither clearCache
-    * nor the ContextCleaner can reclaim them.
-    */
-  def release(s: SparkSession): Unit =
-    memo.keys.filter(_._1 eq s).foreach { k =>
-      memo.remove(k).foreach(df =>
-        CheckpointUtil.checkpointRdd(df).foreach(_.unpersist(false)))
-    }
+  /** Drop every staged frame for `s` and free its checkpoint blocks. */
+  def release(s: SparkSession): Unit = stage.release(s)
 
   // NOT staged: the (doc_id, sh) shingle frame. Measured at sf0.1, a
   // checkpointed shingle stage saves nothing — whole-stage codegen
@@ -80,7 +52,7 @@ object DedupChain {
     * The per-snapshot signature table of a production chain.
     */
   def minhashSigs(s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    cached(s, dir, "sigs")(Dedup.minhashSignatures(docs))
+    stage.checkpoint(s, (dir, "sigs"))(Dedup.minhashSignatures(docs))
 
   /** Candidate pairs with exact word-3-gram Jaccard similarity — the
     * chain's verify stage (staged signatures → bands → candidate join
@@ -88,14 +60,14 @@ object DedupChain {
     */
   def jaccardPairs(s: SparkSession, dir: String, docs: => DataFrame): DataFrame = {
     lazy val d = docs
-    cached(s, dir, "jaccard")(
+    stage.checkpoint(s, (dir, "jaccard"))(
       Dedup.jaccardPairs(
         Dedup.lshCandidatePairsFromSigs(minhashSigs(s, dir, d)), d))
   }
 
   /** Connected-component labels over the jaccard >= 0.5 edge list. */
   def clusterLabels(s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    cached(s, dir, "labels")(
+    stage.checkpoint(s, (dir, "labels"))(
       Dedup.clusters(
         jaccardPairs(s, dir, docs)
           .where(col("jaccard") >= 0.5)
@@ -109,7 +81,7 @@ object DedupChain {
     * it exists to avoid.
     */
   def baseClusterLabels(s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    cached(s, dir, "baselabels") {
+    stage.checkpoint(s, (dir, "baselabels")) {
       // r21: filter the staged all-docs verify stage instead of
       // rebuilding signatures + band join + jaccard verify over the
       // 90% base snapshot. Plan-equal by construction: the band
@@ -138,7 +110,7 @@ object DedupChain {
     * Corpus.chunk(·, 32, 32).
     */
   def paraPairs(s: SparkSession, dir: String, units: => DataFrame): DataFrame =
-    cached(s, dir, "parapairs")(Dedup.paragraphPairs(units))
+    stage.checkpoint(s, (dir, "parapairs"))(Dedup.paragraphPairs(units))
 
   // NOT staged: the paragraph/substring REBUILD outputs
   // (paragraphDedupFilter / substringDedupFilter). Measured r21
@@ -158,7 +130,7 @@ object DedupChain {
     * the fingerprint rows it joins. Same stance as the jaccard stage.
     */
   def winnowPairs(s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    cached(s, dir, "winpairs")(Corpus.winnowCandidatePairs(docs))
+    stage.checkpoint(s, (dir, "winpairs"))(Corpus.winnowCandidatePairs(docs))
 
   /** The (doc_id, is_exact_canonical) flag frame, staged once per
     * (session, dir): SEVEN declared queries (corpus_filter, the four
@@ -171,7 +143,7 @@ object DedupChain {
     * canonical-flag table of a production chain.
     */
   def exactCanonical(s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    cached(s, dir, "exactcanon")(
+    stage.checkpoint(s, (dir, "exactcanon"))(
       Corpus.withExactCanonical(
         docs.select(col("doc_id"), md5(col("text")).as("cmd5")))
         .select(col("doc_id"), col("is_exact_canonical")))
@@ -183,7 +155,7 @@ object DedupChain {
     * query before r21. Same stance as the LSH [[clusterLabels]].
     */
   def winnowClusterLabels(s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    cached(s, dir, "winlabels")(
+    stage.checkpoint(s, (dir, "winlabels"))(
       Dedup.clusters(winnowPairs(s, dir, docs).select("doc_a", "doc_b")))
 
   /** The (doc_id, th1, th2) token-hash frame ([[Dedup.tokenHashes]]),
@@ -196,7 +168,7 @@ object DedupChain {
     * checkpoint write is cheaper than one re-hash pass.
     */
   def tokenHashes(s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    cached(s, dir, "tokhash")(Dedup.tokenHashes(docs))
+    stage.checkpoint(s, (dir, "tokhash"))(Dedup.tokenHashes(docs))
 
   /** Staged 32-bit signature frame (doc_id, simhash) — the majority
     * vote over the staged hashes is itself the expensive map stage
@@ -204,22 +176,9 @@ object DedupChain {
     * and the banded-pairs query fold it. O(1 long per doc).
     */
   def simhashes32(s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    cached(s, dir, "sims32")(Dedup.simhashesTh(tokenHashes(s, dir, docs)))
+    stage.checkpoint(s, (dir, "sims32"))(Dedup.simhashesTh(tokenHashes(s, dir, docs)))
 
   /** Staged 64-bit signature frame (doc_id, simhash). */
   def simhashes64(s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    cached(s, dir, "sims64")(Dedup.simhashes64Th(tokenHashes(s, dir, docs)))
-}
-
-/** The underlying checkpointed RDD of a `localCheckpoint`ed frame —
-  * the handle needed to free its blocks early (the frame itself has a
-  * truncated LogicalRDD plan, so `Dataset.unpersist` is a CacheManager
-  * no-op on it). Only safe when the frame is never read again.
-  */
-private[graft] object CheckpointUtil {
-  def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.logical match {
-      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
-      case _ => None
-    }
+    stage.checkpoint(s, (dir, "sims64"))(Dedup.simhashes64Th(tokenHashes(s, dir, docs)))
 }

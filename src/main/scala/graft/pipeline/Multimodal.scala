@@ -143,8 +143,9 @@ object Multimodal {
     // explicit memory-backed stream (see the object note): write(…,
     // OutputStream) would route through the global-use-cache factory
     val ios = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
-    javax.imageio.ImageIO.write(img, "png", ios)
-    ios.close() // flushes the cache buffer into bos
+    try require(javax.imageio.ImageIO.write(img, "png", ios),
+      "no ImageIO writer claimed the PNG image")
+    finally ios.close() // flushes the cache buffer into bos
     bos.toByteArray
   }
 
@@ -572,15 +573,6 @@ object Multimodal {
   }
 }
 
-/** Session-staged image-hash frame — the DedupChain stance applied to
-  * the perceptual tier: both declared consumers (exact-hash dedup and
-  * the banded-Hamming pair graph) read the SAME (doc_id, ahash,
-  * abits) frame, and the expensive part is the codec round-trip, not
-  * the hash — so the decode+hash pass runs once per (session, dir)
-  * and is checkpointed. At 100 TB this is the only sane shape: you
-  * hash each image once and serve every downstream dedup/cluster/
-  * audit question from the stored hashes.
-  */
 /** Session-staged video-tier chain — the [[AHashChain]] stance for
   * frame fingerprints: the per-frame decode+hash pass and the CC
   * labels each build once per (session, dir), and the four video
@@ -588,19 +580,17 @@ object Multimodal {
   * joins/prefixes of the staged frames.
   */
 object VideoChain {
-  import scala.collection.concurrent.TrieMap
   import org.apache.spark.sql.SparkSession
 
-  private val memo = TrieMap.empty[(SparkSession, String, String), DataFrame]
+  private[graft] val stage = new Staged.Chain("VideoChain", Staged.PerRun)
 
   /** The per-frame aHash table (packed id = video·16 + frame). */
   def frameHashes(
       s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir, "vhashes"),
-      ChainBill.time("VideoChain")(
-        Multimodal.aHash(
-          Multimodal.syntheticVideoFrames(s, docs),
-          Multimodal.PcmDecoder).localCheckpoint(true)))
+    stage.checkpoint(s, (dir, "vhashes"))(
+      Multimodal.aHash(
+        Multimodal.syntheticVideoFrames(s, docs),
+        Multimodal.PcmDecoder))
 
   /** The distinct (video_id, ahash) SET table over the staged frame
     * hashes, staged r22: the pair graph, the incremental consumer
@@ -611,12 +601,10 @@ object VideoChain {
     */
   def sets(
       s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir, "vsets"),
-      ChainBill.time("VideoChain")(
-        frameHashes(s, dir, docs)
-          .select(expr("doc_id DIV 16").as("video_id"), col("ahash"))
-          .distinct()
-          .localCheckpoint(true)))
+    stage.checkpoint(s, (dir, "vsets"))(
+      frameHashes(s, dir, docs)
+        .select(expr("doc_id DIV 16").as("video_id"), col("ahash"))
+        .distinct())
 
   /** The df-capped video near-dup pair graph over the staged frame
     * hashes, staged r21: both `multimodal_video_dedup` and the CC
@@ -625,44 +613,42 @@ object VideoChain {
     */
   def dupPairs(
       s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir, "vpairs"),
-      ChainBill.time("VideoChain")(
-        Multimodal.videoDupPairsFromSets(sets(s, dir, docs))
-          .localCheckpoint(true)))
+    stage.checkpoint(s, (dir, "vpairs"))(
+      Multimodal.videoDupPairsFromSets(sets(s, dir, docs)))
 
   /** CC labels (doc_id, cluster_id, is_canonical) over the df-capped
     * video near-dup pair graph.
     */
   def clusterLabels(
       s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir, "vclusters"),
-      ChainBill.time("VideoChain")(
-        Dedup.clusters(
-          dupPairs(s, dir, docs)
-            .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
-          .localCheckpoint(true)))
+    stage.checkpoint(s, (dir, "vclusters"))(
+      Dedup.clusters(
+        dupPairs(s, dir, docs)
+          .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))))
 
-  /** Session teardown (see [[Chains.releaseAll]]). */
-  def release(s: SparkSession): Unit =
-    memo.keys.filter(_._1 eq s).foreach { k =>
-      memo.remove(k).foreach(df =>
-        CheckpointUtil.checkpointRdd(df).foreach(_.unpersist(false)))
-    }
+  def release(s: SparkSession): Unit = stage.release(s)
 }
 
+/** Session-staged image-hash frame — the DedupChain stance applied to
+  * the perceptual tier: both declared consumers (exact-hash dedup and
+  * the banded-Hamming pair graph) read the SAME (doc_id, ahash,
+  * abits) frame, and the expensive part is the codec round-trip, not
+  * the hash — so the decode+hash pass runs once per (session, dir)
+  * and is checkpointed. At 100 TB this is the only sane shape: you
+  * hash each image once and serve every downstream dedup/cluster/
+  * audit question from the stored hashes.
+  */
 object AHashChain {
-  import scala.collection.concurrent.TrieMap
   import org.apache.spark.sql.SparkSession
 
-  private val memo = TrieMap.empty[(SparkSession, String, String), DataFrame]
+  private[graft] val stage = new Staged.Chain("AHashChain", Staged.PerRun)
 
   def imageHashes(
       s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir, "hashes"),
-      ChainBill.time("AHashChain")(
-        Multimodal.aHash(
-          Multimodal.syntheticImages(s, docs),
-          Multimodal.ImageIODecoder).localCheckpoint(true)))
+    stage.checkpoint(s, (dir, "hashes"))(
+      Multimodal.aHash(
+        Multimodal.syntheticImages(s, docs),
+        Multimodal.ImageIODecoder))
 
   /** The CC labels (doc_id, cluster_id, is_canonical) over the
     * banded-Hamming pair graph, staged once per (session, dir): both
@@ -674,12 +660,10 @@ object AHashChain {
     */
   def clusterLabels(
       s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir, "clusters"),
-      ChainBill.time("AHashChain")(
-        Dedup.clusters(
-          Multimodal.aHashPairs(imageHashes(s, dir, docs), maxHamming = 3)
-            .select(col("doc_a"), col("doc_b")))
-          .localCheckpoint(true)))
+    stage.checkpoint(s, (dir, "clusters"))(
+      Dedup.clusters(
+        Multimodal.aHashPairs(imageHashes(s, dir, docs), maxHamming = 3)
+          .select(col("doc_a"), col("doc_b"))))
 
   /** The per-audio-blob aHash table — the audio twin of
     * [[imageHashes]], staged r21: four declared consumers
@@ -690,11 +674,10 @@ object AHashChain {
     */
   def audioHashes(
       s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir, "audiohashes"),
-      ChainBill.time("AHashChain")(
-        Multimodal.aHash(
-          Multimodal.syntheticAudio(s, docs),
-          Multimodal.PcmDecoder).localCheckpoint(true)))
+    stage.checkpoint(s, (dir, "audiohashes"))(
+      Multimodal.aHash(
+        Multimodal.syntheticAudio(s, docs),
+        Multimodal.PcmDecoder))
 
   /** The banded-Hamming audio pair graph over the staged hashes —
     * shared by the pair query and the CC consumer (each re-ran the
@@ -702,15 +685,8 @@ object AHashChain {
     */
   def audioPairs(
       s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir, "audiopairs"),
-      ChainBill.time("AHashChain")(
-        Multimodal.aHashPairs(audioHashes(s, dir, docs), maxHamming = 3)
-          .localCheckpoint(true)))
+    stage.checkpoint(s, (dir, "audiopairs"))(
+      Multimodal.aHashPairs(audioHashes(s, dir, docs), maxHamming = 3))
 
-  /** Session teardown (see [[Chains.releaseAll]]). */
-  def release(s: SparkSession): Unit =
-    memo.keys.filter(_._1 eq s).foreach { k =>
-      memo.remove(k).foreach(df =>
-        CheckpointUtil.checkpointRdd(df).foreach(_.unpersist(false)))
-    }
+  def release(s: SparkSession): Unit = stage.release(s)
 }

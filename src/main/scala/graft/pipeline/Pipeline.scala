@@ -3010,6 +3010,13 @@ object Corpus {
         col("text_clean"),
         (col("n_dropped") > 0).as("changed"))
 
+  /** [[paragraphNearDedupFilter]]'s default unit-pair Jaccard
+    * threshold and uid stride — the parameters a staged
+    * `fuzzyPairs` frame (DedupChain.paraPairs) is built at.
+    */
+  val ParaMinJaccard: Double = 0.5
+  val ParaIdxCap: Long = 1000L
+
   /** NEAR-dup paragraph dedup with document rebuild — the full
     * FineWeb-style boilerplate pass, exact AND fuzzy in one edit:
     * units that are exact copies OR near-duplicates (word-3-gram
@@ -3043,12 +3050,12 @@ object Corpus {
       idCol: String = "doc_id",
       idxCol: String = "para_idx",
       textCol: String = "para_text",
-      minJaccard: Double = 0.5,
-      idxCap: Long = 1000L,
+      minJaccard: Double = ParaMinJaccard,
+      idxCap: Long = ParaIdxCap,
       fuzzyPairs: Option[DataFrame] = None): DataFrame = {
-    require(fuzzyPairs.isEmpty || (minJaccard == 0.5 && idxCap == 1000L),
+    require(fuzzyPairs.isEmpty || (minJaccard == ParaMinJaccard && idxCap == ParaIdxCap),
       "fuzzyPairs embodies its own minJaccard/idxCap; pass the frame " +
-        "only with the defaults it was staged at (0.5 / 1000)")
+        s"only with the defaults it was staged at ($ParaMinJaccard / $ParaIdxCap)")
     val keyed = units.withColumn("_uid", col(idCol) * idxCap + col(idxCol))
     val hashed = keyed.withColumn("_h", md5(col(textCol)))
     val roots = hashed.groupBy(col("_h")).agg(min(col("_uid")).as("_root"))
@@ -4380,9 +4387,9 @@ object Similarity {
     * (query_id < numQueries) — the expensive hops loop of
     * [[graphSearch]]/[[graphSearchFiltered]], factored out so the
     * session-staged [[WalkChain]] can build it ONCE and fan the four
-    * declared walk consumers out from it (each hop is a separate
-    * eagerly-checkpointed job, so re-running the loop per consumer
-    * paid ~13 scheduler-bound jobs four times for one frontier).
+    * declared walk consumers out from it (re-running the hops loop
+    * per consumer paid its scheduler-bound jobs four times for one
+    * frontier).
     */
   private[graft] def servingFrontier(
       embeddings: DataFrame, graph: DataFrame, numQueries: Int = 8,
@@ -4452,25 +4459,16 @@ object Similarity {
         col("cosine"))
   }
 
-  /** A/B seam for the walk loop's intra-hop truncation spelling
-    * (tools/WalkProbe flips it in-session to dodge host storms):
-    * false = lazy per-hop checkpoints (shipped), true = the pre-r22
-    * eager count() per hop. Not a production knob — both spellings
-    * are output-identical; this exists so the probe's comparison is
-    * same-window.
-    */
-  private[graft] object WalkTuning {
-    @volatile var eagerHops: Boolean = false
-  }
-
   /** The converged walk frontier of [[graphSearchFrom]] — the hops
     * loop alone, exposed so the filtered variant can apply its
-    * predicate before the final ranking.
+    * predicate before the final ranking. `hops` must be at least 1:
+    * the last hop's eager cut is what returns a materialized frame.
     */
   private[graft] def walkFrontier(
       queries: DataFrame, corpusEmb: DataFrame, graph: DataFrame,
       beam: Int, hops: Int, entryNode: Long,
       truncate: Boolean): DataFrame = {
+    require(hops >= 1, s"walkFrontier needs hops >= 1, got $hops")
     // Intra-loop truncation is LAZY (r22): an eager per-hop checkpoint
     // ran one count() job per hop just to materialize a ~128-row
     // frontier. A lazy localCheckpoint still truncates the LOGICAL
@@ -4480,11 +4478,9 @@ object Similarity {
     // materializes (and persists) as a side effect of the next hop's
     // broadcast collect. Only the LAST hop stays eager: chain callers
     // (WalkChain) stage the returned frame and bill its build, so it
-    // must come back materialized. A/B: tools/WalkProbe.
+    // must come back materialized.
     def cut(df: DataFrame): DataFrame =
-      if (truncate)
-        df.localCheckpoint(WalkTuning.eagerHops)
-      else df
+      if (truncate) df.localCheckpoint(false) else df
     def cutLast(df: DataFrame): DataFrame =
       if (truncate) df.localCheckpoint(true) else df
     val corpus = withNorm(corpusEmb, "nid", "ne", "nnorm")
@@ -5853,63 +5849,46 @@ object Similarity {
   }
 }
 
-/** Session-scoped memo for the trained IVF centroid table. Three
-  * declared queries (`ann_recall`, `ann_topk_ivf_trained`,
-  * `ivf_cell_stats`) consume the SAME 2-iteration training run;
-  * per-query retraining paid the training bill three times — the
-  * identical redundancy the round-3 dedup chain had, with the
-  * identical fix ([[DedupChain]]'s localCheckpoint memo: survives the
-  * harness's clearCache; release is caller-owned). The staged frame
-  * is k rows of 64 doubles — nothing at any scale — while the build
-  * it amortizes is the corpus-scale assignment passes.
-  */
-/** Session-scoped memo for the brute-force exact top-5 ground truth
+/** Session-staged brute-force exact top-5 ground truth
   * ([[Similarity.topK]] at the default numQueries=5/k=5): ONE declared
   * query states it (`ann_topk`) and SEVEN recall instruments grade
   * their shortlist against it (`ann_recall`, `_pq`, `_opq`, `_ivfpq`,
   * `_ivf_sampled`, `_binary`, `_compact`), plus `contrastive_triplets`
   * reads its rank-1 prefix — each re-ran the broadcast-queries
   * corpus-scan + window per query before r21. O(numQueries·k) rows.
-  * Released between bench passes (computed, not trained).
   */
 object TopKChain {
-  import scala.collection.concurrent.TrieMap
   import org.apache.spark.sql.SparkSession
 
-  private val memo = TrieMap.empty[(SparkSession, String), DataFrame]
+  private[graft] val stage = new Staged.Chain("TopKChain", Staged.PerRun)
 
   def exact(s: SparkSession, dir: String, embs: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir),
-      ChainBill.time("TopKChain")(
-        Similarity.topK(embs).localCheckpoint(true)))
+    stage.checkpoint(s, dir)(Similarity.topK(embs))
 
-  /** Session teardown / between-pass release (see [[Chains.releaseAll]]). */
-  def release(s: SparkSession): Unit =
-    memo.keys.filter(_._1 eq s).foreach { k =>
-      memo.remove(k).foreach(df =>
-        CheckpointUtil.checkpointRdd(df).foreach(_.unpersist(false)))
-    }
+  def release(s: SparkSession): Unit = stage.release(s)
 }
 
+/** Session-staged trained IVF centroid table. Three declared queries
+  * (`ann_recall`, `ann_topk_ivf_trained`, `ivf_cell_stats`) consume
+  * the SAME 2-iteration training run; per-query retraining paid the
+  * training bill three times. The staged frame is k rows of 64
+  * doubles — nothing at any scale — while the build it amortizes is
+  * the corpus-scale assignment passes.
+  */
 object IvfChain {
-  import scala.collection.concurrent.TrieMap
   import org.apache.spark.sql.SparkSession
 
-  private val memo = TrieMap.empty[(SparkSession, String, String), DataFrame]
+  private[graft] val stage = new Staged.Chain("IvfChain", Staged.PerRun)
 
   def centroids(s: SparkSession, dir: String, embs: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir, "ivf"),
-      ChainBill.time("IvfChain")(
-        Similarity.kmeansCentroids(embs).localCheckpoint(true)))
+    stage.checkpoint(s, (dir, "ivf"))(Similarity.kmeansCentroids(embs))
 
   /** The trained PQ codebook table (sub, cid, ce) — m·ksub tiny rows,
     * shared by `pq_codes` and `ann_topk_pq` exactly as the IVF
     * centroids are shared by their three consumers.
     */
   def pqBooks(s: SparkSession, dir: String, embs: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir, "pq"),
-      ChainBill.time("IvfChain")(
-        Similarity.pqCodebooks(embs).localCheckpoint(true)))
+    stage.checkpoint(s, (dir, "pq"))(Similarity.pqCodebooks(embs))
 
   /** The bitext-mining candidate frontier (src_id, tgt_id, cosv,
     * cos_micro) over the staged centroids, staged once per (session,
@@ -5918,15 +5897,13 @@ object IvfChain {
     * trainedAssignments + cell-tile cosine passes per bench pass for
     * one identical O(candidate) frame. A mining deployment
     * materializes the frontier per batch pass and derives margins and
-    * audits from it; released between passes with the rest of the
-    * chain.
+    * audits from it.
     */
   def bitextCandidates(s: SparkSession, dir: String, embs: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir, "bitext"), ChainBill.time("IvfChain") {
+    stage.checkpoint(s, (dir, "bitext")) {
       lazy val e = embs
       Similarity.bitextCandidates(e, centroids(s, dir, e))
-        .localCheckpoint(true)
-    })
+    }
 
   /** Trained parametric-OPQ rotation — delegates to [[OpqChain]]
     * (round-16: the OPQ train moved to a once-per-SESSION chain, the
@@ -5973,69 +5950,45 @@ object IvfChain {
     */
   def opqServed(s: SparkSession, dir: String, embs: => DataFrame): TrainedIndex =
     synchronized {
-      // collision-resistant store key: two distinct sfDir strings must
-      // never share a slot (a 32-bit hashCode collision would silently
-      // serve one dir's trained index against the other's oracle)
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val p = s"$storeRoot/$key"
-      val marker = new java.io.File(p, "_SAVED")
-      if (!marker.exists()) {
+      val p = s"$storeRoot/${DiskStore.dirKey(dir)}"
+      DiskStore.writeOnce(p)(
         IndexStore.save(p, TrainedIndex(
           Some(opqRotation(s, dir, embs)),
           opqCentroids(s, dir, embs),
-          opqBooks(s, dir, embs)))
-        marker.createNewFile()
-      }
+          opqBooks(s, dir, embs))))
       IndexStore.load(s, p)
     }
 
-  /** Releases the per-pass IVF/PQ staging. The OPQ artifacts are NOT
-    * here — they live in [[OpqChain]], which (like [[KnnChain]])
-    * survives release: a trained index is a once-per-session artifact,
-    * and min-of-passes should measure its marginal serve cost.
+  /** Releases the IVF/PQ staging; the OPQ artifacts live in the
+    * [[OpqChain]].
     */
-  def release(s: SparkSession): Unit = {
-    memo.keys.filter(_._1 eq s).foreach { k =>
-      memo.remove(k).foreach(df =>
-        CheckpointUtil.checkpointRdd(df).foreach(_.unpersist(false)))
-    }
-  }
+  def release(s: SparkSession): Unit = stage.release(s)
 }
 
-/** Session-scoped memo for the trained OPQ artifacts — the KnnChain
-  * stance applied to the heaviest trained chain in the repo (round-15
-  * verdict: `ann_topk_opq_ivfpq` re-paid the rotation + rotated-space
-  * IVF cells + rotated-space PQ codebooks from scratch every bench
-  * pass, 14.0 s — 8.7% of the whole bench in one row — while
-  * `_loaded` (2.9 s) proved the serve path). Staged once per
-  * (session, sfDir) and deliberately NOT cleared by
-  * [[IvfChain.release]]: like the k-NN graph, a trained index is a
-  * build-once/serve-many artifact, so the bench's min-of-passes
-  * measures the marginal cost a production index server pays per
-  * query session, with the full train still visible in pass-1 raw
-  * walls. All three artifacts are deterministic (6dp-rounded moment
-  * matrix → fixed-sweep Jacobi; KmeansCtes-seeded Lloyd), so a staged
-  * copy is bit-identical to a fresh train — the oracle replays the
-  * train from scratch and stays green either way.
+/** Session-staged trained OPQ artifacts — the KnnChain stance applied
+  * to the heaviest trained chain in the repo (round-15 verdict:
+  * `ann_topk_opq_ivfpq` re-paid the rotation + rotated-space IVF cells
+  * + rotated-space PQ codebooks from scratch every bench pass, 14.0 s —
+  * 8.7% of the whole bench in one row — while `_loaded` (2.9 s)
+  * proved the serve path). All three artifacts are deterministic
+  * (6dp-rounded moment matrix → fixed-sweep Jacobi; KmeansCtes-seeded
+  * Lloyd), so a staged copy is bit-identical to a fresh train — the
+  * oracle replays the train from scratch and stays green either way.
   */
 object OpqChain {
-  import scala.collection.concurrent.TrieMap
   import org.apache.spark.sql.SparkSession
 
-  private val rotMemo = TrieMap.empty[(SparkSession, String), Array[Array[Double]]]
-  private val memo = TrieMap.empty[(SparkSession, String, String), DataFrame]
+  private[graft] val stage = new Staged.Chain("OpqChain", Staged.Trained)
 
   /** The trained parametric-OPQ rotation (64 rows of 64 doubles) —
-    * driver-side tiny, memoized because training reads the corpus
+    * driver-side tiny, staged because training reads the corpus
     * (one distributed second-moment pass); shared by the rotated-books
     * build and every OPQ query.
     */
   def rotation(s: SparkSession, dir: String, embs: => DataFrame): Array[Array[Double]] =
-    rotMemo.getOrElseUpdate((s, dir),
-      ChainBill.time("OpqChain")(Opq.trainRotation(embs)))
+    stage.value(s, (dir, "rotation"))(Opq.trainRotation(embs))
 
-  /** OPQ-rotated corpus: NOT checkpointed — the rotation apply is a
+  /** OPQ-rotated corpus: NOT staged — the rotation apply is a
     * map-only pass (64 codegen'd dot kernels per row), cheaper to
     * recompute than a corpus-scale checkpoint is to hold; only the
     * trained artifacts (rotation, cells, books) are pinned.
@@ -6048,9 +6001,8 @@ object OpqChain {
     * basis.
     */
   def books(s: SparkSession, dir: String, embs: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir, "opq"),
-      ChainBill.time("OpqChain")(
-        Similarity.pqCodebooks(rotated(s, dir, embs)).localCheckpoint(true)))
+    stage.checkpoint(s, (dir, "opq"))(
+      Similarity.pqCodebooks(rotated(s, dir, embs)))
 
   /** IVF centroids trained in the OPQ-rotated space — the coarse
     * quantizer of the composed OPQ+IVF+PQ index (both stages must live
@@ -6058,51 +6010,257 @@ object OpqChain {
     * rotated residual-free subvectors).
     */
   def centroids(s: SparkSession, dir: String, embs: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir, "opqcents"),
-      ChainBill.time("OpqChain")(
-        Similarity.kmeansCentroids(rotated(s, dir, embs)).localCheckpoint(true)))
+    stage.checkpoint(s, (dir, "opqcents"))(
+      Similarity.kmeansCentroids(rotated(s, dir, embs)))
 
-  /** Session teardown hook, mirroring [[PackChain.release]]: drop the
-    * memoized rotation and unpersist the checkpointed books/centroids
-    * for `s`. Bench deliberately does NOT call this between passes —
-    * OpqChain is a TRAINED-artifact chain whose min-of-passes measures
-    * marginal serve cost — but a long-lived multi-session deployment
-    * must, or the localCheckpointed frames and the SparkSession
-    * references they hold leak for the JVM lifetime.
-    */
-  def release(s: SparkSession): Unit = {
-    rotMemo.keys.filter(_._1 eq s).foreach(rotMemo.remove)
-    memo.keys.filter(_._1 eq s).foreach { k =>
-      memo.remove(k).foreach(df =>
-        CheckpointUtil.checkpointRdd(df).foreach(_.unpersist(false)))
-    }
-  }
+  def release(s: SparkSession): Unit = stage.release(s)
 }
 
-/** Session-teardown sweep over every session-staged chain — the one
-  * call a long-lived multi-session deployment makes when a session
-  * retires, so no memoized frame or rotation keeps the dead session
-  * reachable. Bench's BETWEEN-pass reset deliberately releases only
-  * the DATA-transform chains (trained-artifact chains stay staged so
-  * min-of-passes measures marginal serve cost); this releases both
-  * kinds.
-  */
+/** Session-teardown sweep over every staged chain ([[Staged.releaseAll]]). */
 object Chains {
   import org.apache.spark.sql.SparkSession
-  def releaseAll(s: SparkSession): Unit = {
-    DedupChain.release(s)
-    IvfChain.release(s)
-    BpeChain.release(s)
-    PackChain.release(s)
-    OpqChain.release(s)
-    DsirChain.release(s)
-    BigramChain.release(s)
-    KnnChain.release(s)
-    WalkChain.release(s)
-    AHashChain.release(s)
-    VideoChain.release(s)
-    TopKChain.release(s)
-    BucketStore.release(s)
+  def releaseAll(s: SparkSession): Unit = Staged.releaseAll(s)
+}
+
+/** Session-staged MATERIALIZED packing windows — the BpeChain stance
+  * applied to the packing tier: three declared queries read the SAME
+  * full-corpus ctx=512 window set (`pack_materialize` emits it,
+  * `pack_batches` ranks it into batch manifests, and
+  * `pack_batches_epochs`' full-participation epoch group repacks it),
+  * and each was paying its own offsets-prefix + slice + window
+  * shuffle + md5 pass. A production pipeline materializes windows
+  * ONCE per corpus snapshot and every manifest derives from the
+  * stored window table — the staged frame IS that artifact:
+  * (window_id, n_docs, n_tokens, window_md5).
+  */
+object PackChain {
+  import org.apache.spark.sql.SparkSession
+
+  private[graft] val stage = new Staged.Chain("PackChain", Staged.PerRun)
+
+  /** The full-corpus materialized window table for `ctx`, built once
+    * per (session, sfDir, ctx) — the key carries the ctx so a consumer
+    * packing at a different window size can never be served a
+    * mismatched staged frame.
+    */
+  def materialized(
+      s: SparkSession, dir: String, docs: => DataFrame,
+      ctx: Long = 512L): (Long, DataFrame) =
+    ctx -> stage.checkpoint(s, (dir, ctx))(Corpus.packMaterialize(docs, ctx = ctx))
+
+  def release(s: SparkSession): Unit = stage.release(s)
+}
+
+/** Session-staged ENCODED corpus — the DedupChain/BigramChain pattern
+  * applied to the tokenizer: six declared queries re-denominate on
+  * BPE symbols (`tokenizer_fertility`, `tokenizer_ids`,
+  * `pack_sequences_bpe`, `pack_materialize_bpe`,
+  * `corpus_budget_sample_bpe`, `shard_assign_bpe`), and each was
+  * paying its own full encode pass. A production pipeline encodes
+  * ONCE and stores the symbol column — [[Bpe.decode]]'s scaladoc makes
+  * exactly that argument (the ~6x-smaller lossless representation) —
+  * so the staged frame IS the production artifact, not a cache trick:
+  * (doc_id, source, lang, nc chars, nw words, bpe symbols). Consumers
+  * read `bpe` as their text column with `length` as the token counter;
+  * every downstream plan is unchanged in shape.
+  */
+object BpeChain {
+  import org.apache.spark.sql.SparkSession
+
+  private[graft] val stage = new Staged.Chain("BpeChain", Staged.PerRun)
+
+  def encoded(s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
+    stage.checkpoint(s, dir)(
+      docs.select(
+        col("doc_id"), col("source"), col("lang"),
+        length(col("text")).cast("bigint").as("nc"),
+        size(TextOps.tokens(col("text"))).cast("bigint").as("nw"),
+        Bpe.encode(col("text")).as("bpe")))
+
+  def release(s: SparkSession): Unit = stage.release(s)
+}
+
+/** Session-staged DSIR model — the BigramChain stance applied to the
+  * importance-resampling family: three declared consumers
+  * (dsir_weights, corpus_sample_dsir, gate_correlation) each need the
+  * per-doc weights, and each was paying its own feature explode +
+  * model training. A production pipeline trains the 128-bucket ratio
+  * table once and scores everything with it, so the staged artifacts
+  * ARE the production shape: the (doc, bucket) count frame
+  * (checkpointed — the explode never re-runs) and the per-doc weights
+  * derived from it. Target fixed to the declared queries' spelling
+  * (source = src1).
+  */
+object DsirChain {
+  import org.apache.spark.sql.SparkSession
+
+  private[graft] val stage = new Staged.Chain("DsirChain", Staged.Trained)
+
+  def pairs(s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
+    stage.checkpoint(s, (dir, "pairs"))(
+      Corpus.dsirPairs(docs, col("source") === "src1", 128))
+
+  def weights(s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
+    stage.checkpoint(s, (dir, "weights")) {
+      val p = pairs(s, dir, docs)
+      Corpus.dsirScore(p.select("doc_id", "b", "cnt"), Corpus.dsirRatiosFromPairs(p))
+    }
+
+  def release(s: SparkSession): Unit = stage.release(s)
+}
+
+/** Session-staged self-trained bigram LM — the DedupChain/IvfChain
+  * pattern applied to the fluency tier: doc_bigram_logprob and
+  * ppl_buckets each need the SAME vocabulary-scale (bg, logp_micro)
+  * table, and training it reads the whole corpus; staging it once per
+  * (session, sfDir) makes every consumer after the first pay only its
+  * own scoring join. The bigram ROWS are deliberately NOT staged —
+  * the explode is a map-only pass, cheaper to recompute than a
+  * corpus-token-scale checkpoint is to hold (the opqRotated stance).
+  */
+object BigramChain {
+  import org.apache.spark.sql.SparkSession
+
+  private[graft] val stage = new Staged.Chain("BigramChain", Staged.PerRun)
+
+  def bigrams(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      explode(TextOps.shingles(col("text"), 2)).as("bg"))
+
+  def model(s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
+    stage.checkpoint(s, (dir, "model"))(Corpus.bigramModel(bigrams(docs)))
+
+  /** The per-doc scored frame (doc_id, n_bigrams, logprob_micro),
+    * staged r21: both fluency consumers (`doc_bigram_logprob` and
+    * `ppl_buckets`) re-ran the corpus bigram explode + model score
+    * join for the same O(docs)-row result; the scored frame is three
+    * numeric columns per doc — far cheaper to hold than to re-derive.
+    */
+  def scored(s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
+    stage.checkpoint(s, (dir, "scored")) {
+      lazy val d = docs
+      Corpus.bigramScore(bigrams(d), model(s, dir, d))
+    }
+
+  def release(s: SparkSession): Unit = stage.release(s)
+}
+
+/** Session-staged NN-descent k-NN graph — the DedupChain stance
+  * applied to [[Similarity.knnWorkingList]]. Four declared queries
+  * consume the SAME converged graph (`ann_knn_graph` takes the top-4
+  * prefix, `ann_recall_knn_graph` grades that prefix,
+  * `embedding_neardup_graph` clusters its high-cosine edges,
+  * `ann_graph_walk` serves from it); before staging each rebuilt
+  * ~4.7 s of descent from scratch (round-13 verdict). The staged
+  * frame is the searchK-wide working list — O(n·searchK) rows, the
+  * widest thing any consumer needs — so prefixes and filters are
+  * free projections. No extra checkpoint: the descent already
+  * `localCheckpoint`s its final round, so the registry pins the
+  * truncated frame as-is.
+  */
+object KnnChain {
+  import org.apache.spark.sql.SparkSession
+
+  private[graft] val stage = new Staged.Chain("KnnChain", Staged.Trained)
+
+  /** The converged searchK-wide working list (u, v, cosine, rank),
+    * built once per (session, scale dir).
+    */
+  def workingList(s: SparkSession, dir: String, embs: => DataFrame): DataFrame =
+    stage.frame(s, (dir, "list"))(Similarity.knnWorkingList(embs))
+
+  /** The finished top-`k` graph (vec_id, rank, neighbor_id, cosine) —
+    * a prefix projection of the staged working list.
+    */
+  def graph(s: SparkSession, dir: String, embs: => DataFrame, k: Int = 4): DataFrame =
+    Similarity.graphPrefix(workingList(s, dir, embs), k)
+
+  /** CC labels over the graph's cosine ≥ 0.4 edges, staged once per
+    * (session, dir): both semantic-cluster consumers
+    * (`embedding_neardup_graph` and the `embedding_representatives`
+    * manifest) read the same component structure — the AHashChain
+    * stance for the embedding tier.
+    */
+  def clusterLabels(s: SparkSession, dir: String, embs: => DataFrame): DataFrame =
+    stage.checkpoint(s, (dir, "cc")) {
+      val edges = Similarity.graphPrefix(workingList(s, dir, embs), 4)
+        .where(col("cosine") >= 0.4)
+        .select(
+          least(col("vec_id"), col("neighbor_id")).as("doc_a"),
+          greatest(col("vec_id"), col("neighbor_id")).as("doc_b"))
+        .distinct()
+      Dedup.clusters(edges)
+    }
+
+  /** The converged working list over the BASE snapshot (vec_id % 50
+    * != 0) — the "index as it existed before the delta arrived" that
+    * [[Similarity.knnGraphAppend]] maintains. Its own entry: the
+    * full-corpus list cannot serve here because an incremental append
+    * must, by definition, not have seen the delta.
+    */
+  def baseWorkingList(s: SparkSession, dir: String, embs: => DataFrame): DataFrame =
+    stage.frame(s, (dir, "base"))(
+      Similarity.knnWorkingList(embs.where(col("vec_id") % 50 =!= 0)))
+
+  def release(s: SparkSession): Unit = stage.release(s)
+}
+
+/** Session-staged serving-walk FRONTIER — the DedupChain stance
+  * applied to graph serving (round 21): four declared queries
+  * (`ann_graph_walk`, `ann_graph_walk_filtered`,
+  * `ann_recall_graph_walk`, `ann_recall_walk_filtered`) walk the SAME
+  * 8-query frame over the SAME staged k=16 graph with the same
+  * beam/hops, and each was re-running the whole hops loop for one
+  * identical frontier. A serving deployment computes a query batch's
+  * frontier once and both ranks and post-filters from it; the staged
+  * frame IS that artifact: (query_id, node, cosine), O(queries·beam)
+  * rows. Output-identical by construction: [[Similarity.graphSearch]]
+  * is literally rankWalkOut ∘ servingFrontier, and the consumers
+  * share the servingFrontier value (WalkChainSpec pins equality).
+  */
+object WalkChain {
+  import org.apache.spark.sql.SparkSession
+
+  private[graft] val stage = new Staged.Chain("WalkChain", Staged.PerRun)
+
+  /** The converged default-parameter serving frontier (numQueries=8,
+    * beam=16, hops=5 over the k=16 staged graph), built once per
+    * (session, scale dir). Already lineage-truncated by the walk's own
+    * final-hop checkpoint — the registry pins the frame as-is.
+    */
+  def frontier(s: SparkSession, dir: String, embs: => DataFrame): DataFrame =
+    stage.frame(s, dir) {
+      lazy val e = embs
+      Similarity.servingFrontier(e, KnnChain.graph(s, dir, e, k = 16))
+    }
+
+  def release(s: SparkSession): Unit = stage.release(s)
+}
+
+/** The per-JVM write-once/serve-many disk stores
+  * ([[IvfChain.opqServed]], [[DedupStateStore]], [[BucketStore]]).
+  */
+private[pipeline] object DiskStore {
+
+  /** Collision-resistant store key for a scale dir: two distinct dir
+    * strings must never share a slot (a 32-bit hashCode collision
+    * would silently serve one dir's artifacts against the other's
+    * oracle).
+    */
+  def dirKey(dir: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
+
+  /** Runs `write` (which creates directory `p`) unless `p` already
+    * carries the `_SAVED` marker of a finished write, then marks it.
+    * Callers serialize their calls.
+    */
+  def writeOnce(p: String)(write: => Unit): Unit = {
+    val marker = new java.io.File(p, "_SAVED")
+    if (!marker.exists()) {
+      write
+      marker.createNewFile()
+    }
   }
 }
 
@@ -6122,287 +6280,17 @@ object Chains {
   * (round-10 advice): a stale store can never serve against a fresh
   * oracle, and two sfDirs can never collide into one slot.
   */
-/** Session-staged self-trained bigram LM — the DedupChain/IvfChain
-  * pattern applied to the fluency tier: doc_bigram_logprob and
-  * ppl_buckets each need the SAME vocabulary-scale (bg, logp_micro)
-  * table, and training it reads the whole corpus; staging it once per
-  * (session, sfDir) makes every consumer after the first pay only its
-  * own scoring join. The bigram ROWS are deliberately NOT staged —
-  * the explode is a map-only pass, cheaper to recompute than a
-  * corpus-token-scale checkpoint is to hold (the opqRotated stance).
-  */
-/** Session-staged ENCODED corpus — the DedupChain/BigramChain pattern
-  * applied to the tokenizer: six declared queries re-denominate on
-  * BPE symbols (`tokenizer_fertility`, `tokenizer_ids`,
-  * `pack_sequences_bpe`, `pack_materialize_bpe`,
-  * `corpus_budget_sample_bpe`, `shard_assign_bpe`), and each was
-  * paying its own full encode pass. A production pipeline encodes
-  * ONCE and stores the symbol column — [[Bpe.decode]]'s scaladoc makes
-  * exactly that argument (the ~6x-smaller lossless representation) —
-  * so the staged frame IS the production artifact, not a cache trick:
-  * (doc_id, source, lang, nc chars, nw words, bpe symbols),
-  * checkpointed once per (session, sfDir). Consumers read `bpe` as
-  * their text column with `length` as the token counter; every
-  * downstream plan is unchanged in shape.
-  */
-/** Session-staged MATERIALIZED packing windows — the BpeChain stance
-  * applied to the packing tier: three declared queries read the SAME
-  * full-corpus ctx=512 window set (`pack_materialize` emits it,
-  * `pack_batches` ranks it into batch manifests, and
-  * `pack_batches_epochs`' full-participation epoch group repacks it),
-  * and each was paying its own offsets-prefix + slice + window
-  * shuffle + md5 pass. A production pipeline materializes windows
-  * ONCE per corpus snapshot and every manifest derives from the
-  * stored window table — the staged frame IS that artifact:
-  * (window_id, n_docs, n_tokens, window_md5), checkpointed once per
-  * (session, sfDir). Released between bench passes like the other
-  * data-transform chains (Dedup/Ivf/Bpe): it is per-snapshot work,
-  * not a trained artifact.
-  */
-object PackChain {
-  import scala.collection.concurrent.TrieMap
-  import org.apache.spark.sql.SparkSession
-
-  private val memo = TrieMap.empty[(SparkSession, String, Long), DataFrame]
-
-  /** The full-corpus materialized window table for `ctx`, built once
-    * per (session, sfDir, ctx) — the memo key carries the ctx so a
-    * consumer packing at a different window size can never be served
-    * a mismatched staged frame.
-    */
-  def materialized(
-      s: SparkSession, dir: String, docs: => DataFrame,
-      ctx: Long = 512L): (Long, DataFrame) =
-    ctx -> memo.getOrElseUpdate((s, dir, ctx),
-      ChainBill.time("PackChain")(
-        Corpus.packMaterialize(docs, ctx = ctx).localCheckpoint(true)))
-
-  def release(s: SparkSession): Unit =
-    memo.keys.filter(_._1 eq s).foreach { k =>
-      memo.remove(k).foreach(df =>
-        CheckpointUtil.checkpointRdd(df).foreach(_.unpersist(false)))
-    }
-}
-
-object BpeChain {
-  import scala.collection.concurrent.TrieMap
-  import org.apache.spark.sql.SparkSession
-
-  private val memo = TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def encoded(s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir),
-      ChainBill.time("BpeChain")(
-        docs.select(
-          col("doc_id"), col("source"), col("lang"),
-          length(col("text")).cast("bigint").as("nc"),
-          size(TextOps.tokens(col("text"))).cast("bigint").as("nw"),
-          Bpe.encode(col("text")).as("bpe"))
-          .localCheckpoint(true)))
-
-  def release(s: SparkSession): Unit =
-    memo.keys.filter(_._1 eq s).foreach { k =>
-      memo.remove(k).foreach(df =>
-        CheckpointUtil.checkpointRdd(df).foreach(_.unpersist(false)))
-    }
-}
-
-/** Session-staged DSIR model — the BigramChain stance applied to the
-  * importance-resampling family: three declared consumers
-  * (dsir_weights, corpus_sample_dsir, gate_correlation) each need the
-  * per-doc weights, and each was paying its own feature explode +
-  * model training. A production pipeline trains the 128-bucket ratio
-  * table once and scores everything with it, so the staged artifacts
-  * ARE the production shape: the (doc, bucket) count frame
-  * (checkpointed — the explode never re-runs) and the per-doc weights
-  * derived from it. Target fixed to the declared queries' spelling
-  * (source = src1).
-  */
-object DsirChain {
-  import scala.collection.concurrent.TrieMap
-  import org.apache.spark.sql.SparkSession
-
-  private val memoP = TrieMap.empty[(SparkSession, String), DataFrame]
-  private val memoW = TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def pairs(s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    memoP.getOrElseUpdate((s, dir),
-      ChainBill.time("DsirChain")(
-        Corpus.dsirPairs(docs, col("source") === "src1", 128)
-          .localCheckpoint(true)))
-
-  def weights(s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    memoW.getOrElseUpdate((s, dir), ChainBill.time("DsirChain") {
-      val p = pairs(s, dir, docs)
-      Corpus.dsirScore(
-        p.select("doc_id", "b", "cnt"),
-        Corpus.dsirRatiosFromPairs(p)).localCheckpoint(true)
-    })
-
-  /** Session teardown (see [[Chains.releaseAll]]). */
-  def release(s: SparkSession): Unit =
-    Seq(memoP, memoW).foreach(m =>
-      m.keys.filter(_._1 eq s).foreach { k =>
-        m.remove(k).foreach(df =>
-          CheckpointUtil.checkpointRdd(df).foreach(_.unpersist(false)))
-      })
-}
-
-object BigramChain {
-  import scala.collection.concurrent.TrieMap
-  import org.apache.spark.sql.SparkSession
-
-  private val memo = TrieMap.empty[(SparkSession, String), DataFrame]
-
-  def bigrams(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      explode(TextOps.shingles(col("text"), 2)).as("bg"))
-
-  def model(s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir),
-      ChainBill.time("BigramChain")(
-        Corpus.bigramModel(bigrams(docs)).localCheckpoint(true)))
-
-  /** The per-doc scored frame (doc_id, n_bigrams, logprob_micro),
-    * staged r21: both fluency consumers (`doc_bigram_logprob` and
-    * `ppl_buckets`) re-ran the corpus bigram explode + model score
-    * join for the same O(docs)-row result; the scored frame is three
-    * numeric columns per doc — far cheaper to hold than to re-derive.
-    */
-  def scored(s: SparkSession, dir: String, docs: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir + "#scored"), ChainBill.time("BigramChain") {
-      lazy val d = docs
-      Corpus.bigramScore(bigrams(d), model(s, dir, d)).localCheckpoint(true)
-    })
-
-  /** Session teardown (see [[Chains.releaseAll]]). */
-  def release(s: SparkSession): Unit =
-    memo.keys.filter(_._1 eq s).foreach { k =>
-      memo.remove(k).foreach(df =>
-        CheckpointUtil.checkpointRdd(df).foreach(_.unpersist(false)))
-    }
-}
-
-/** Session-scoped memo for the NN-descent k-NN graph — the DedupChain
-  * stance applied to [[Similarity.knnWorkingList]]. Four declared
-  * queries consume the SAME converged graph (`ann_knn_graph` takes
-  * the top-4 prefix, `ann_recall_knn_graph` grades that prefix,
-  * `embedding_neardup_graph` clusters its high-cosine edges,
-  * `ann_graph_walk` serves from it); before this memo each rebuilt
-  * ~4.7 s of descent from scratch (round-13 verdict). The staged
-  * frame is the searchK-wide working list — O(n·searchK) rows, the
-  * widest thing any consumer needs — so prefixes and filters are
-  * free projections. No extra checkpoint on insert: the descent
-  * already `localCheckpoint`s its final round, so the memo pins the
-  * truncated frame as-is.
-  */
-object KnnChain {
-  import scala.collection.concurrent.TrieMap
-  import org.apache.spark.sql.SparkSession
-
-  private val memo = TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** The converged searchK-wide working list (u, v, cosine, rank),
-    * built once per (session, scale dir).
-    */
-  def workingList(s: SparkSession, dir: String, embs: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir),
-      ChainBill.time("KnnChain")(Similarity.knnWorkingList(embs)))
-
-  /** The finished top-`k` graph (vec_id, rank, neighbor_id, cosine) —
-    * a prefix projection of the staged working list.
-    */
-  def graph(s: SparkSession, dir: String, embs: => DataFrame, k: Int = 4): DataFrame =
-    Similarity.graphPrefix(workingList(s, dir, embs), k)
-
-  /** CC labels over the graph's cosine ≥ 0.4 edges, staged once per
-    * (session, dir): both semantic-cluster consumers
-    * (`embedding_neardup_graph` and the `embedding_representatives`
-    * manifest) read the same component structure — the AHashChain
-    * stance for the embedding tier.
-    */
-  def clusterLabels(s: SparkSession, dir: String, embs: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir + "#cc"), ChainBill.time("KnnChain") {
-      val edges = Similarity.graphPrefix(workingList(s, dir, embs), 4)
-        .where(col("cosine") >= 0.4)
-        .select(
-          least(col("vec_id"), col("neighbor_id")).as("doc_a"),
-          greatest(col("vec_id"), col("neighbor_id")).as("doc_b"))
-        .distinct()
-      Dedup.clusters(edges).localCheckpoint(true)
-    })
-
-  private val baseMemo = TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** The converged working list over the BASE snapshot (vec_id % 50
-    * != 0) — the "index as it existed before the delta arrived" that
-    * [[Similarity.knnGraphAppend]] maintains. Its own memo entry: the
-    * full-corpus list cannot serve here because an incremental append
-    * must, by definition, not have seen the delta.
-    */
-  def baseWorkingList(s: SparkSession, dir: String, embs: => DataFrame): DataFrame =
-    baseMemo.getOrElseUpdate((s, dir),
-      ChainBill.time("KnnChain")(
-        Similarity.knnWorkingList(embs.where(col("vec_id") % 50 =!= 0))))
-
-  /** Session teardown (see [[Chains.releaseAll]]) — like OpqChain, a
-    * TRAINED-artifact chain Bench deliberately keeps staged between
-    * passes; this is for session retirement only.
-    */
-  def release(s: SparkSession): Unit =
-    Seq(memo, baseMemo).foreach(m =>
-      m.keys.filter(_._1 eq s).foreach { k =>
-        m.remove(k).foreach(df =>
-          CheckpointUtil.checkpointRdd(df).foreach(_.unpersist(false)))
-      })
-}
-
-/** Session-staged serving-walk FRONTIER — the DedupChain stance
-  * applied to graph serving (round 21): four declared queries
-  * (`ann_graph_walk`, `ann_graph_walk_filtered`,
-  * `ann_recall_graph_walk`, `ann_recall_walk_filtered`) walk the SAME
-  * 8-query frame over the SAME staged k=16 graph with the same
-  * beam/hops, and each was re-running the whole hops loop — ~13
-  * scheduler-bound jobs per consumer (every hop eagerly
-  * localCheckpoints a ~128-row frontier, so the loop is latency-bound,
-  * not data-bound) for one identical frontier. A serving deployment
-  * computes a query batch's frontier once and both ranks and
-  * post-filters from it; the staged frame IS that artifact:
-  * (query_id, node, cosine), O(queries·beam) rows. Released between
-  * bench passes like the data-transform chains (the walk is per-query-
-  * batch work, not a trained artifact — unlike the KnnChain graph it
-  * walks). Output-identical by construction: [[Similarity.graphSearch]]
-  * is literally rankWalkOut ∘ servingFrontier, and the consumers now
-  * share the servingFrontier value (WalkChainSpec pins equality).
-  */
-object WalkChain {
-  import scala.collection.concurrent.TrieMap
-  import org.apache.spark.sql.SparkSession
-
-  private val memo = TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** The converged default-parameter serving frontier (numQueries=8,
-    * beam=16, hops=5 over the k=16 staged graph), built once per
-    * (session, scale dir). Already lineage-truncated by the walk's own
-    * per-hop checkpointing — the memo pins the final frame as-is.
-    */
-  def frontier(s: SparkSession, dir: String, embs: => DataFrame): DataFrame =
-    memo.getOrElseUpdate((s, dir), ChainBill.time("WalkChain") {
-      lazy val e = embs
-      Similarity.servingFrontier(e, KnnChain.graph(s, dir, e, k = 16))
-    })
-
-  /** Session teardown / between-pass release (see [[Chains.releaseAll]]). */
-  def release(s: SparkSession): Unit =
-    memo.keys.filter(_._1 eq s).foreach { k =>
-      memo.remove(k).foreach(df =>
-        CheckpointUtil.checkpointRdd(df).foreach(_.unpersist(false)))
-    }
-}
-
 object DedupStateStore {
   private lazy val storeRoot: String =
     java.nio.file.Files.createTempDirectory("graft_dedupstate_").toString
+
+  private def served(s: org.apache.spark.sql.SparkSession, dir: String, table: String)(
+      state: => DataFrame): DataFrame =
+    synchronized {
+      val p = s"$storeRoot/${DiskStore.dirKey(dir)}/$table"
+      DiskStore.writeOnce(p)(state.write.mode("overwrite").parquet(p))
+      s.read.parquet(p)
+    }
 
   /** [[Corpus.substringFirstOccurrences]] of `snapshot`, computed and
     * written on first touch per (JVM, dir), served from parquet on
@@ -6412,18 +6300,7 @@ object DedupStateStore {
       s: org.apache.spark.sql.SparkSession,
       dir: String,
       snapshot: => DataFrame): DataFrame =
-    synchronized {
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val p = s"$storeRoot/$key/substring_firsts"
-      val marker = new java.io.File(p, "_SAVED")
-      if (!marker.exists()) {
-        Corpus.substringFirstOccurrences(snapshot)
-          .write.mode("overwrite").parquet(p)
-        marker.createNewFile()
-      }
-      s.read.parquet(p)
-    }
+    served(s, dir, "substring_firsts")(Corpus.substringFirstOccurrences(snapshot))
 
   /** [[Corpus.winnowFingerprintRows]] of `snapshot` served from
     * parquet — the winnow index's write-once/serve-many state, same
@@ -6433,18 +6310,7 @@ object DedupStateStore {
       s: org.apache.spark.sql.SparkSession,
       dir: String,
       snapshot: => DataFrame): DataFrame =
-    synchronized {
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      val p = s"$storeRoot/$key/winnow_rows"
-      val marker = new java.io.File(p, "_SAVED")
-      if (!marker.exists()) {
-        Corpus.winnowFingerprintRows(snapshot)
-          .write.mode("overwrite").parquet(p)
-        marker.createNewFile()
-      }
-      s.read.parquet(p)
-    }
+    served(s, dir, "winnow_rows")(Corpus.winnowFingerprintRows(snapshot))
 }
 
 /** Write-once/serve-many BUCKETED doc-keyed store — the DedupStateStore
@@ -6458,17 +6324,24 @@ object DedupStateStore {
   * directory, keyed by input-dir md5 so distinct scales coexist.
   */
 object BucketStore {
-  import scala.collection.concurrent.TrieMap
   import org.apache.spark.sql.SparkSession
   import graft.functions.dotF
 
-  private val memo = TrieMap.empty[(SparkSession, String), (String, String)]
+  private[graft] val stage = new Staged.Chain("BucketStore", Staged.Trained)
 
-  /** (docStatsTable, embNormTable), both bucketed by doc_id. */
+  /** (docStatsTable, embNormTable), both bucketed by doc_id. Released
+    * by dropping both catalog tables; the temp parquet directories
+    * stay on disk (write-once store; the OS temp reaper owns them).
+    */
   def tables(s: SparkSession, dir: String): (String, String) = synchronized {
-    memo.getOrElseUpdate((s, dir), ChainBill.time("BucketStore") {
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+    stage[(String, String)](s, dir, { case (dTab, eTab) =>
+      Seq(dTab, eTab).foreach(t =>
+        try s.sql(s"DROP TABLE IF EXISTS $t")
+        // NonFatal only: swallowing OutOfMemoryError/InterruptedException
+        // here would mask a dying JVM or lose an interrupt mid-teardown
+        catch { case scala.util.control.NonFatal(_) => () })
+    }) {
+      val key = DiskStore.dirKey(dir).take(8)
       val root = java.nio.file.Files
         .createTempDirectory("graft_bucket_").toString
       val dTab = s"graft_docs_bkt_$key"
@@ -6486,26 +6359,10 @@ object BucketStore {
             .cast("long").as("norm_micro")),
         eTab, s"$root/embs", "doc_id")
       (dTab, eTab)
-    })
-  }
-
-  /** Session teardown (see [[Chains.releaseAll]]): forget the memoized
-    * session key and drop its catalog tables — without this the memo
-    * holds the retired SparkSession strongly for the JVM lifetime (the
-    * OpqChain leak, round-16 advice). The temp parquet directories
-    * stay on disk (write-once store; the OS temp reaper owns them).
-    */
-  def release(s: SparkSession): Unit = synchronized {
-    memo.keys.filter(_._1 eq s).foreach { k =>
-      memo.remove(k).foreach { case (dTab, eTab) =>
-        Seq(dTab, eTab).foreach(t =>
-          try s.sql(s"DROP TABLE IF EXISTS $t")
-          // NonFatal only: swallowing OutOfMemoryError/InterruptedException
-          // here would mask a dying JVM or lose an interrupt mid-teardown
-          catch { case scala.util.control.NonFatal(_) => () })
-      }
     }
   }
+
+  def release(s: SparkSession): Unit = stage.release(s)
 }
 
 object Sessionize {

@@ -47,17 +47,13 @@ class WalkChainSpec extends SparkSpec {
     WalkChain.release(spark)
   }
 
-  test("lazy intra-hop truncation equals the eager per-hop spelling (r22)") {
-    // r22 pin for the walk loop's checkpoint spelling: intra-loop cuts
-    // are now lazy (materialized by the next hop's broadcast collect);
-    // flipping the probe seam back to the pre-r22 eager per-hop
-    // count() must not move a single output row.
+  test("the walk rejects hops = 0 instead of returning an unmaterialized frontier") {
+    // only the last hop's eager cut materializes the frontier that
+    // WalkChain stages and bills; with no hop there is no last cut
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
     val g = KnnChain.graph(spark, dir, e, k = 16)
-    def out(): Seq[String] = rows(Similarity.graphSearch(e, g))
-    val lazySpelling = out()
-    Similarity.WalkTuning.eagerHops = true
-    try assert(out() == lazySpelling)
-    finally Similarity.WalkTuning.eagerHops = false
+    val err = intercept[IllegalArgumentException](
+      Similarity.servingFrontier(e, g, hops = 0))
+    assert(err.getMessage.contains("hops >= 1"))
   }
 }
